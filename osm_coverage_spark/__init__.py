@@ -19,7 +19,7 @@ Spark DataFrame plans under Catalyst/AQE:
 
 Design rule: built-in pyspark.sql.functions first (whole-stage codegen),
 Arrow-vectorized pandas UDFs only where column expressions genuinely cannot
-express the semantics (ray-cast PIP, image codec), no row-at-a-time Python.
+express the semantics (image codec), no row-at-a-time Python.
 """
 
 __version__ = "0.1.0"

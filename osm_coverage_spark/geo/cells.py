@@ -36,17 +36,30 @@ IX_BASE = 2**25
 # ~153 m cell edge in latitude at res 18 — the default match-radius tiling.
 DEFAULT_RES = 18
 
+# Degrees. Bounds the rounding of a longitude interpolated between two
+# coordinates (~1e-13 for |lon| <= 180) with a wide margin.
+LON_PAD = 1e-9
+
 
 def cell_size_deg(res: int) -> float:
     return 360.0 / (2**res)
 
 
+def _index(v: Column, res: int, origin: float) -> Column:
+    """Row (origin 90, on latitude) or column (origin 180, on longitude)
+    index of ``v`` — floor is monotone, so a value range maps onto the
+    inclusive index range of its two ends."""
+    return F.floor((v + F.lit(origin)) / F.lit(cell_size_deg(res))).cast("long")
+
+
+def cell_id(ix: Column, iy: Column, res: int) -> Column:
+    """Pack a (row, column) index pair into the BIGINT cell id."""
+    return F.lit(res).cast("long") * F.lit(R_BASE) + ix * F.lit(IX_BASE) + iy
+
+
 def cell_expr(lat: Column, lon: Column, res: int) -> Column:
     """BIGINT cell id at resolution ``res`` (pure arithmetic, codegen-able)."""
-    sz = F.lit(cell_size_deg(res))
-    ix = F.floor((lat + F.lit(90.0)) / sz).cast("long")
-    iy = F.floor((lon + F.lit(180.0)) / sz).cast("long")
-    return (F.lit(res).cast("long") * F.lit(R_BASE) + ix * F.lit(IX_BASE) + iy)
+    return cell_id(_index(lat, res, 90.0), _index(lon, res, 180.0), res)
 
 
 def cell_sql(lat: str, lon: str, res: int) -> str:
@@ -66,6 +79,27 @@ def cell_py(lat: float, lon: float, res: int) -> int:
     ix = math.floor((lat + 90.0) / sz)
     iy = math.floor((lon + 180.0) / sz)
     return res * R_BASE + ix * IX_BASE + iy
+
+
+def bbox_index(lat_min: Column, lat_max: Column, lon_min: Column,
+               lon_max: Column, res: int) -> Column:
+    """struct<r0, r1, c0, c1>: the inclusive row (latitude band) and column
+    ranges of the cells a bbox touches, by ``cell_expr``'s own arithmetic —
+    a point inside the bbox always falls in a cell of these ranges, so a
+    cover built from them never disagrees with a point's cell.
+
+    This is the polyfill primitive: ``sequence(r0, r1) × sequence(c0, c1)``
+    explodes to the bbox cover, ``r0 <= row <= r1`` selects the edges of a
+    latitude band, and ``c0 <= col <= c1`` within it marks the cells an
+    edge's bbox touches (geo/pip.py). The longitude side is widened by
+    ``LON_PAD`` before flooring, so a value computed from the bbox corners
+    and off by rounding (a ray's crossing longitude) stays in the ranges."""
+    return F.struct(
+        _index(lat_min, res, 90.0).alias("r0"),
+        _index(lat_max, res, 90.0).alias("r1"),
+        _index(lon_min - F.lit(LON_PAD), res, 180.0).alias("c0"),
+        _index(lon_max + F.lit(LON_PAD), res, 180.0).alias("c1"),
+    )
 
 
 def parent_expr(cell: Column, res: int, parent_res: int) -> Column:
@@ -145,22 +179,3 @@ GRID_DISK_SQL_JOINS = (
     "CROSS JOIN (SELECT unnest(generate_series(-{k}, {k})) AS _dx) _dxs "
     "CROSS JOIN (SELECT unnest(generate_series(-{k}, {k})) AS _dy) _dys"
 )
-
-
-def bbox_polyfill_expr(lat_min: Column, lat_max: Column,
-                       lon_min: Column, lon_max: Column, res: int):
-    """Cover a bbox with cells at ``res`` → array of ids (explode to rows).
-
-    This is the polygon-polyfill primitive: polygons are first reduced to
-    their bbox (cheap, pure SQL); exact point-in-polygon refinement happens
-    after the candidate equi-join (geo/pip.py ray-cast Arrow UDF).
-    """
-    sz = F.lit(cell_size_deg(res))
-    ix0 = F.floor((lat_min + F.lit(90.0)) / sz).cast("long")
-    ix1 = F.floor((lat_max + F.lit(90.0)) / sz).cast("long")
-    iy0 = F.floor((lon_min + F.lit(180.0)) / sz).cast("long")
-    iy1 = F.floor((lon_max + F.lit(180.0)) / sz).cast("long")
-    base = F.lit(res).cast("long") * F.lit(R_BASE)
-    ix = F.explode(F.sequence(ix0, ix1)).alias("_pix")
-    iy = F.explode(F.sequence(iy0, iy1)).alias("_piy")
-    return base, ix, iy  # assembled by operators needing it

@@ -1,106 +1,149 @@
-"""Point-in-polygon: geocell bbox-polyfill candidate join + exact ray-cast
-refinement in a vectorized Arrow UDF.
+"""Point-in-polygon join, decided in the JVM by classifying geocells.
 
 Replaces the reference's GeoPandas sjoin (scripts/02_extract_alkis.py:820-837,
-point-in-district assignment with a left-join fallback name) without shapely:
-the crossing-number test is vectorized over (points × polygon edges) in numpy
-inside ``applyInPandas`` — one pandas batch per polygon group, no per-row
-Python.
+point-in-district assignment with a left-join fallback name) without shapely
+and without a Python stage: the plan never crosses the Arrow boundary.
 
-Plan shape (SURVEY §4.3):
-1. polygons → bbox → polyfill cells (pure SQL explode) — small table;
-2. points → cell equi-join (broadcast of the polyfill) → candidates;
-3. exact ray-cast in ``mapInPandas`` over the candidate batches — NO
-   shuffle: rings reach executors once via a broadcast dict (polygons are
-   dimension-sized), Arrow batches are bounded by maxRecordsPerBatch, and
-   the crossing test vectorizes per polygon via a batch-local groupby
-   (measured 4.9 s → sub-second at sf0.1 vs the per-(poly, cell)
-   applyInPandas form, whose ~10³ tiny groups each paid a Python
-   round-trip and shipped the ring on every candidate row);
-4. left join back: unmatched points get the fallback name
-   (``kein Stadtteil gefunden`` in the reference, parameterized here).
+Plan shape (SURVEY §4.3; interior/boundary approximations as in *Scalable
+Spatial Topology Joins*, EDBT 2026):
+
+1. polygon side, one row per ring (small — the dimension side): split the
+   ring into edges i → i+1 (with wrap) and map each edge's bbox onto cell
+   rows and columns (``cells.bbox_index``). Every cell of the ring's bbox
+   cover that an edge bbox touches is *boundary*; any other cell is crossed
+   by no edge, so the ray-cast of its centre decides *interior* or
+   *outside* for all of it. Outside cells are dropped. A boundary cell
+   keeps only its latitude band — the ring's non-horizontal edges whose
+   rows include the cell's, the only edges that can straddle a point in
+   it — and of those, the edges over its column in full, and the edges
+   right of it reduced to a parity bit plus a few vertex latitudes (see
+   ``_cell_cover``). Entries are grouped into one row per cell;
+2. point side: one broadcast equi-join on the point's cell. An interior
+   entry is a hit as is; a boundary entry is a hit when its crossing number
+   is odd (higher-order aggregates). Rings of one name are OR-ed, because
+   the name is a hit when any of its entries is.
+
+Exactness: the crossing test is the even-odd ray-cast of the reference
+(``tests/pip_reference.ray_cast_batch``), ``px < x1 + (py - y1) / (y2 - y1)
+* (x2 - x1)`` over straddling edges in that operation order, so every
+decision matches it bit for bit. Latitudes are only compared, which makes
+band membership exact; the crossing longitude is rounded, by far less than
+``cells.LON_PAD``, by which ``bbox_index`` pads every longitude range, so an
+edge's rounded crossing stays inside the cells marked boundary and off the
+cells classified by their centre. Coordinates are degrees (|lon| <= 180).
 """
 
 from __future__ import annotations
 
-import weakref
-from collections import OrderedDict
-
-import numpy as np
-import pandas as pd  # noqa: F401  (pandas frames flow through refine)
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from .cells import cell_expr
-
-
-def ray_cast_batch(px: np.ndarray, py: np.ndarray,
-                   vx: np.ndarray, vy: np.ndarray) -> np.ndarray:
-    """Crossing-number PIP for a batch of points against ONE polygon ring.
-
-    px/py: (n,) point coords; vx/vy: (m,) closed-ring vertices (first !=
-    last is fine — the wrap edge is included). Fully vectorized: builds an
-    (n, m) crossing matrix. Boundary points follow the half-open edge rule
-    (consistent, deterministic)."""
-    x1, y1 = vx, vy
-    x2, y2 = np.roll(vx, -1), np.roll(vy, -1)
-    # edge straddles the horizontal line through the point
-    py_col = py[:, None]
-    px_col = px[:, None]
-    straddle = (y1[None, :] > py_col) != (y2[None, :] > py_col)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x1[None, :] + (py_col - y1[None, :]) / (y2[None, :] - y1[None, :]) * (
-            x2[None, :] - x1[None, :]
-        )
-    crossings = (straddle & (px_col < xint)).sum(axis=1)
-    return (crossings % 2) == 1
+from .cells import bbox_index, cell_expr, cell_id, cell_size_deg
 
 
-_RINGS_CACHE: "OrderedDict[tuple, tuple]" = OrderedDict()
-_RINGS_CACHE_MAX = 8  # distinct polygon plans kept warm per session
+def _odd_crossings(band: Column, px: Column, py: Column) -> Column:
+    """Crossing-number parity of (px, py) over ``band``'s edges. The And
+    short-circuits, so the division only runs on straddling edges, whose
+    y2 - y1 is never 0 (ANSI mode would raise on a 0.0 divisor)."""
+
+    def flip(odd, e):
+        straddle = (e["y1"] > py) != (e["y2"] > py)
+        xint = e["x1"] + (py - e["y1"]) / (e["y2"] - e["y1"]) * (e["x2"] - e["x1"])
+        return odd != (straddle & (px < xint))
+
+    return F.aggregate(band, F.lit(False), flip)
 
 
-def _rings_broadcast(spark, polygons: DataFrame, poly_name: str):
-    """name → [(vx, vy), ...] broadcast, cached per (SparkContext, plan
-    semantic hash) so repeated pip_join invocations over the same polygon
-    plan reuse one broadcast variable instead of leaking one per call.
-
-    Bounded LRU (r4 verdict #4 / ADVICE): eviction unpersists the
-    broadcast, so a long session cycling through many distinct polygon
-    plans holds at most _RINGS_CACHE_MAX live broadcasts. A weakref to
-    the owning SparkContext guards against id() reuse after a context is
-    GC'd/stopped (ADVICE): a hit whose context is dead or different is
-    discarded, never served."""
-    sc = spark.sparkContext
-    try:
-        key = (id(sc), polygons.semanticHash())
-    except Exception:  # semanticHash unavailable → no caching
-        key = None
-    if key is not None and key in _RINGS_CACHE:
-        bc, sc_ref = _RINGS_CACHE[key]
-        if sc_ref() is sc:
-            _RINGS_CACHE.move_to_end(key)
-            return bc
-        del _RINGS_CACHE[key]  # stale: id(sc) reused by a new context
-    rings: dict[str, list] = {}
-    for name, ring in polygons.select(poly_name, "ring").collect():
-        rings.setdefault(name, []).append(
-            (
-                np.array([p["lon"] for p in ring], dtype=np.float64),
-                np.array([p["lat"] for p in ring], dtype=np.float64),
-            )
-        )
-    bc = sc.broadcast(rings)
-    if key is not None:
-        _RINGS_CACHE[key] = (bc, weakref.ref(sc))
-        while len(_RINGS_CACHE) > _RINGS_CACHE_MAX:
-            _, (old, _ref) = _RINGS_CACHE.popitem(last=False)
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # context already stopped — nothing to free
-    return bc
+def _cell_cover(polygons: DataFrame, poly_name: str, res: int) -> DataFrame:
+    """(_pcell, _zones: array<struct<name, inside, edges, ends, odd>>) — one
+    row per cell a ring is interior to or on the boundary of."""
+    ring, n = F.col("ring"), F.size("ring")
+    edges = F.transform(ring, lambda a, i: F.struct(
+        a["lon"].alias("x1"), a["lat"].alias("y1"),
+        ring[(i + 1) % n]["lon"].alias("x2"), ring[(i + 1) % n]["lat"].alias("y2"),
+    ))
+    edges = F.transform(edges, lambda e: F.struct(
+        e["x1"], e["y1"], e["x2"], e["y2"],
+        bbox_index(F.least(e["y1"], e["y2"]), F.greatest(e["y1"], e["y2"]),
+                   F.least(e["x1"], e["x2"]), F.greatest(e["x1"], e["x2"]), res)
+        .alias("b"),
+    ))
+    # an edge is right of cell column iy when iy < its ``rc``; a horizontal
+    # edge never crosses a ray, so it has none
+    rc = lambda e: F.when(e["y1"] != e["y2"], e["b"]["c0"])  # noqa: E731
+    m = F.size("_edges")
+    rings = polygons.where((n > 0) & F.col(poly_name).isNotNull()).select(
+        F.col(poly_name).alias("name"), edges.alias("_edges"),
+    ).select("name", F.transform("_edges", lambda e, i: F.struct(
+        e["x1"], e["y1"], e["x2"], e["y2"], e["b"], rc(e).alias("rc"),
+        # the row of vertex i = (x1, y1), and the rc of the edge ending there
+        F.when(e["y1"] <= e["y2"], e["b"]["r0"]).otherwise(e["b"]["r1"]).alias("vrow"),
+        rc(F.col("_edges")[(i + m - 1) % m]).alias("rc_prev"),
+    )).alias("_edges"))
+    # the ring's bbox cover is the union of its edges' index ranges
+    b = F.col("_edges")["b"]
+    ix, iy = F.col("_ix"), F.col("_iy")
+    rows = rings.select(
+        "name", "_edges",
+        F.explode(F.sequence(F.array_min(b["r0"]), F.array_max(b["r1"]))).alias("_ix"),
+        F.sequence(F.array_min(b["c0"]), F.array_max(b["c1"])).alias("_cols"),
+    ).select(
+        "name", "_ix", "_cols",
+        F.filter("_edges", lambda e: (e["b"]["r0"] <= ix) & (ix <= e["b"]["r1"]))
+        .alias("_touch"),
+        # the row's vertices, as the edges starting at them
+        F.filter("_edges", lambda e: e["vrow"] == ix).alias("_verts"),
+    ).select(
+        "name", "_ix", "_touch", "_verts",
+        F.filter("_touch", lambda e: e["y1"] != e["y2"]).alias("_band"),
+        F.explode("_cols").alias("_iy"),
+    )
+    on_col = lambda e: (e["b"]["c0"] <= iy) & (iy <= e["b"]["c1"])  # noqa: E731
+    right = lambda c: F.coalesce(iy < c, F.lit(False))  # noqa: E731
+    cells = rows.select(
+        "name", "_ix", "_iy", "_band", "_verts",
+        F.exists("_touch", on_col).alias("_boundary"),
+    )
+    sz = cell_size_deg(res)
+    centre_inside = _odd_crossings(
+        F.col("_band"),
+        (iy + F.lit(0.5)) * F.lit(sz) - F.lit(180.0),
+        (ix + F.lit(0.5)) * F.lit(sz) - F.lit(90.0),
+    )
+    # A boundary entry splits its band by column. Edges left of the cell
+    # never cross a ray from a point in it. Edges over its column take the
+    # full test (``edges``). An edge right of it crosses exactly when
+    # lo <= py < hi, so, as #{lo <= py} - #{hi <= py}, the parity of those
+    # crossings is that of the right-hand edge ends at or below py. An end
+    # in a lower row always counts: their parity is ``odd``. One in a higher
+    # row never does. A vertex in the row is the end of its two edges, so
+    # it counts twice, i.e. not at all, unless exactly one of them is on
+    # the right: those vertices' latitudes are the ``ends`` compared per
+    # point. Interior entries need no edges.
+    boundary = F.col("_boundary")
+    entry = F.struct(
+        "name",
+        (~boundary).alias("inside"),
+        F.when(boundary, F.transform(
+            F.filter("_band", on_col),
+            lambda e: F.struct(e["x1"], e["y1"], e["x2"], e["y2"]))).alias("edges"),
+        F.when(boundary, F.transform(
+            F.filter("_verts", lambda e: right(e["rc"]) != right(e["rc_prev"])),
+            lambda e: e["y1"])).alias("ends"),
+        F.when(boundary, F.size(F.filter(
+            "_band", lambda e: right(e["rc"]) & (e["b"]["r0"] < ix))) % 2 == 1).alias("odd"),
+    )
+    # an empty band never hits; outside cells are dropped — by
+    # collect_list, which skips nulls, so the filter is not pushed below
+    # the (costly) classification and evaluated twice
+    keep = F.when(boundary, F.size("_band") > 0).otherwise(centre_inside)
+    # one partition: the cover is broadcast, so it is dimension-sized, and
+    # a shuffle to group it would cost more than the grouping
+    return (
+        cells.coalesce(1).groupBy(cell_id(ix, iy, res).alias("_pcell"))
+        .agg(F.collect_list(F.when(keep, entry)).alias("_zones"))
+        .where(F.size("_zones") > 0)
+    )
 
 
 def pip_join(
@@ -114,127 +157,32 @@ def pip_join(
     """points(point_id, lat, lon) × polygons(poly_name, ring:array<struct
     <lon:double, lat:double>>) → (point_id, poly_name).
 
-    Polygons are polyfilled at bbox level (cheap superset); exact membership
-    decided by the vectorized ray-cast grouped per polygon. ``fallback``
-    mimics the reference's left-join default; pass None for inner semantics.
+    A point is in a ring by the even-odd ray-cast; a name may own several
+    rings (exclaves), and is a hit if any of them contains the point. Rings
+    may be closed (first vertex repeated) or open (the wrap edge is
+    implied). Polygons may overlap, and the two modes differ there:
+
+    - ``fallback=None``: one row per (point, containing name) — a point in
+      two overlapping names gets two rows, a point in none gets no row;
+    - ``fallback`` set: exactly one row per input point — the greatest
+      containing name, or ``fallback`` when no name contains it (the
+      reference's left-join default).
     """
-    ring_lon = F.transform(F.col("ring"), lambda p: p["lon"])
-    ring_lat = F.transform(F.col("ring"), lambda p: p["lat"])
-    polys = polygons.select(
-        poly_name,
-        "ring",
-        F.array_min(ring_lat).alias("lat_min"),
-        F.array_max(ring_lat).alias("lat_max"),
-        F.array_min(ring_lon).alias("lon_min"),
-        F.array_max(ring_lon).alias("lon_max"),
-    )
-
-    pts = points.select(
-        point_id,
-        "lat",
-        "lon",
-        cell_expr(F.col("lat"), F.col("lon"), res).alias("_pcell"),
-    )
-    # rings collected up front (cached broadcast, see _rings_broadcast) —
-    # also tells us whether any name has multiple outer rings, which
-    # decides if the cover needs a dedup below
-    rings_b = _rings_broadcast(points.sparkSession, polygons, poly_name)
-    multi_ring = any(len(r) > 1 for r in rings_b.value.values())
-    # bbox polyfill: explode the polygon's cell cover (small — polygons are
-    # the dimension side), broadcast-join candidates on cell equality.
-    from .cells import IX_BASE, R_BASE, cell_size_deg
-
-    sz = F.lit(cell_size_deg(res))
-    ix0 = F.floor((F.col("lat_min") + F.lit(90.0)) / sz).cast("long")
-    ix1 = F.floor((F.col("lat_max") + F.lit(90.0)) / sz).cast("long")
-    iy0 = F.floor((F.col("lon_min") + F.lit(180.0)) / sz).cast("long")
-    iy1 = F.floor((F.col("lon_max") + F.lit(180.0)) / sz).cast("long")
-    cover = (
-        polys.withColumn("_ix", F.explode(F.sequence(ix0, ix1)))
-        .withColumn("_iy", F.explode(F.sequence(iy0, iy1)))
-        .withColumn(
-            "_pcell",
-            F.lit(res).cast("long") * F.lit(R_BASE)
-            + F.col("_ix") * F.lit(IX_BASE)
-            + F.col("_iy"),
-        )
-        .select(poly_name, "_pcell")
-    )
-    if multi_ring:
-        # two rings of one name may cover the same cell — without this
-        # dedup the candidate join would emit duplicate hits; skipped in
-        # the common single-ring case (no duplicates possible)
-        cover = cover.distinct()
-
-    # rings travel ONCE per executor as a broadcast dict (polygons are the
-    # dimension side — same size assumption the broadcast cover already
-    # makes), NOT as an array column replicated onto every candidate row:
-    # candidate rows stay narrow and no groupBy shuffle is needed.
-    # Keyed name → LIST of rings: a boundary with exclaves / multiple
-    # assembled outer rings (sources/pbf.relation_boundary_rings) gets
-    # every ring ray-cast and the results OR-ed — one ring row must not
-    # shadow another. Broadcasts are cached per (context, plan) so
-    # repeated invocations (bench loops, long sessions) reuse one
-    # broadcast instead of leaking a new one per call.
-    # fallback path: LEFT join against the cover so cell-less points
-    # survive to the refine stage — the final assembly is then ONE tiny
-    # groupBy over (id, hit-zone-or-null) pairs instead of a second pass
-    # over the points table plus a join behind the Python ray-cast
-    # (r6 session 3: 1.62 → 1.13 s at sf1.0-replica; the r6 session-2
-    # stream-side-repartition variant of that join is superseded).
-    cand = pts.join(F.broadcast(cover), "_pcell",
+    px, py = F.col("lon"), F.col("lat")
+    pts = points.select(point_id, "lat", "lon",
+                        cell_expr(py, px, res).alias("_pcell"))
+    cand = pts.join(F.broadcast(_cell_cover(polygons, poly_name, res)), "_pcell",
                     "inner" if fallback is None else "left")
-
-    schema = StructType(
-        [f for f in cand.schema.fields if f.name in (point_id, poly_name)]
+    # an interior entry hits as is; a boundary entry by the parity of its
+    # over-column edges' crossings XOR its right-hand edges' (see _cell_cover)
+    hits = F.transform(
+        F.filter("_zones", lambda z: F.when(z["inside"], True).otherwise(
+            _odd_crossings(z["edges"], px, py)
+            != F.aggregate(z["ends"], z["odd"], lambda odd, y: odd != (y <= py)))),
+        lambda z: z["name"],
     )
-    flag_misses = fallback is not None
-
-    def refine(batches):
-        # mapInPandas (not applyInPandas): no shuffle — each Arrow batch
-        # holds MANY (polygon, cell) candidate groups and is bounded by
-        # maxRecordsPerBatch, so a country-sized polygon still never lands
-        # in one task; the ray-cast stays vectorized per polygon via a
-        # batch-local groupby.
-        rings = rings_b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            px = pdf["lon"].to_numpy(np.float64)
-            py = pdf["lat"].to_numpy(np.float64)
-            mask = np.zeros(len(pdf), dtype=bool)
-            # dropna: a left-joined row with no cover polygon has a null
-            # zone — no ray-cast, definitional miss
-            for zone, idx in pdf.groupby(
-                poly_name, sort=False, dropna=True
-            ).indices.items():
-                hit = np.zeros(len(idx), dtype=bool)
-                for vx, vy in rings[zone]:  # OR across the name's rings
-                    hit |= ray_cast_batch(px[idx], py[idx], vx, vy)
-                mask[idx] = hit
-            if flag_misses:
-                # emit EVERY candidate row, null zone on miss: the
-                # downstream groupBy needs the misses to resurrect the
-                # fallback rows without re-deriving the points table
-                out = pdf[[point_id]].copy()
-                out[poly_name] = pdf[poly_name].where(mask, None)
-                yield out
-            else:
-                out = pdf.loc[mask, [point_id, poly_name]]
-                if len(out):
-                    yield out
-
-    hits = cand.mapInPandas(refine, schema)
     if fallback is None:
-        # hits-only contract: one row per (point, containing polygon) —
-        # overlapping polygon names CAN emit several rows per point here
-        return hits
-    # fallback contract: exactly ONE row per point (the fixture/reference
-    # district semantics — polygon interiors are disjoint; would two
-    # overlapping names both contain a point, the greater name wins).
-    # max() ignores nulls, so any hit beats the miss markers, and the
-    # groupBy shuffles only narrow (id, zone) pairs — strictly less than
-    # the old plan's id-projection exchange + join on the same key space.
-    return hits.groupBy(point_id).agg(
-        F.max(poly_name).alias(poly_name)
-    ).withColumn(poly_name, F.coalesce(F.col(poly_name), F.lit(fallback)))
+        return cand.select(point_id, F.explode(F.array_distinct(hits)).alias(poly_name))
+    # a left-joined point without a cover cell has null _zones → null max
+    return cand.select(
+        point_id, F.coalesce(F.array_max(hits), F.lit(fallback)).alias(poly_name))

@@ -1,9 +1,9 @@
 """PIP / raster↔vector joins + image-codec pipeline queries.
 
-``pip_zones`` runs the real applyInPandas ray-cast machinery; with the
-derived rectangle polygons it is provably equal to the strict-bbox DuckDB
-oracle (edges offset off the coordinate lattice), so the Arrow-UDF path is
-oracle-verified. The codec queries (`image_decode_verify`,
+``pip_zones`` runs the real ``geo/pip.pip_join`` (cell classification plus
+the JVM ray-cast); with the derived rectangle polygons it is provably equal
+to the strict-bbox DuckDB oracle (edges offset off the coordinate lattice),
+so the join is oracle-verified. The codec queries (`image_decode_verify`,
 `image_features`, `image_frame_sample`) run the REAL PNG/JPEG codecs
 distributed and emit integer-exact stats matched hash-for-hash by the
 block-class DuckDB oracles in sources/image_oracle.py (every 8×8 block of

@@ -386,38 +386,6 @@ def test_dedup_substring_no_all_pairs(spark, sf_dir):
     assert "_blk" in plan  # hot-bucket block-split branch is live
 
 
-def test_pip_rings_cache_bounded_lru(spark):
-    """Cycling through many distinct polygon plans must keep at most
-    _RINGS_CACHE_MAX live ring broadcasts (eviction unpersists) — the
-    r4 unbounded-growth finding."""
-    from osm_coverage_spark.geo import pip
-
-    pip._RINGS_CACHE.clear()
-    ring_schema = "name string, ring array<struct<lon double, lat double>>"
-    first = None
-    for i in range(pip._RINGS_CACHE_MAX + 4):
-        polys = spark.createDataFrame(
-            [(f"z{i}", [{"lon": float(i), "lat": 0.0},
-                        {"lon": float(i) + 1.0, "lat": 0.0},
-                        {"lon": float(i) + 1.0, "lat": 1.0},
-                        {"lon": float(i), "lat": 1.0}])],
-            ring_schema,
-        )
-        bc = pip._rings_broadcast(spark, polys, "name")
-        if first is None:
-            first = bc
-    assert len(pip._RINGS_CACHE) == pip._RINGS_CACHE_MAX
-    # the oldest entry was evicted AND unpersisted (value access fails or
-    # re-request builds a fresh broadcast object)
-    polys0 = spark.createDataFrame(
-        [("z0", [{"lon": 0.0, "lat": 0.0}, {"lon": 1.0, "lat": 0.0},
-                 {"lon": 1.0, "lat": 1.0}, {"lon": 0.0, "lat": 1.0}])],
-        ring_schema,
-    )
-    again = pip._rings_broadcast(spark, polys0, "name")
-    assert again is not first
-
-
 def test_sessionize_single_shuffle(spark, sf_dir):
     """Gaps-and-islands must cost ONE exchange: the windows hash-partition
     on user_id and the closing groupBy(user_id, session_idx) reuses it
@@ -615,20 +583,31 @@ def test_dot_fast_equals_interpreted_fold(spark):
 
 
 def test_pip_fallback_single_points_pass(spark, sf_dir):
-    """r6 session 3: the fallback assembly is a groupBy over the ray-cast
-    output, not a second derivation of the points table — the images
-    parquet must be scanned exactly once, and no join may follow the
-    Python stage."""
+    """The fallback assembly is a projection over the one cell join: the
+    images' documents parquet is scanned exactly once, the points are
+    joined only to the broadcast cell cover (never back to themselves) and
+    never aggregated — the one aggregate builds the cover."""
     from osm_coverage_spark import queries_images
 
     df = queries_images.q_pip_zones(spark, sf_dir)
     plan = _plan(df)
     assert plan.count("documents.parquet") == 1, plan
-    after_python = plan.split("MapInPandas")[0]  # tree prints top-down:
-    # everything ABOVE the Python stage is the final assembly
-    assert "Join" not in after_python, plan
-    # max(zone) is a string agg → SortAggregate (no fixed-width buffer)
-    assert "Aggregate" in after_python, plan
+    assert plan.count("Join") == plan.count("BroadcastHashJoin") == 1, plan
+    points_side = plan.split("BroadcastExchange")[0]
+    assert "Aggregate" not in points_side, plan
+    assert "collect_list" in plan, plan
+
+
+def test_pip_queries_have_no_python_stage(spark, sf_dir):
+    """Point-in-polygon is decided in the JVM: neither PIP query may cross
+    into a Python worker."""
+    import re
+
+    from osm_coverage_spark import queries_images
+
+    for q in (queries_images.q_pip_zones, queries_images.q_raster_vector_join):
+        plan = _plan(q(spark, sf_dir))
+        assert not re.search(r"Python|InPandas|InArrow", plan), plan
 
 
 def test_tfidf_shares_one_doc_exchange(spark, sf_dir):
@@ -671,11 +650,11 @@ def test_winnow_kernel_is_map_side(spark, sf_dir):
 
 def test_dedup_rows_single_scan(spark, sf_dir):
     """r6 session 3: the three counts are one aggregation pass — one scan
-    of the documents parquet behind the osm view, no join."""
+    of the orders parquet behind the osm view, no join."""
     from osm_coverage_spark import queries_misc
 
     df = queries_misc.q_dedup_rows(spark, sf_dir)
     plan = _plan(df)
     assert plan.count("orders.parquet") == 1, plan
-    assert "Join" not in plan or "CartesianProduct" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -975,9 +975,9 @@ def winnow(docs: DataFrame) -> DataFrame:
     by two documents contributes at least one common gram_hash.
 
     r6: vectorized Arrow kernel (guide §4) — the SQL-window form
-    (``_winnow_window``, kept below as the oracle-shaped twin and proven
-    equal by ``tests/test_winnow_kernel.py``) explodes one row per gram
-    and pays a full shuffle+sort of the gram table just to run a per-doc
+    (``tests/winnow_reference.py``, the oracle-shaped twin that
+    ``tests/test_winnow_kernel.py`` proves equal) explodes one row per
+    gram and pays a full shuffle+sort of the gram table just to run a per-doc
     sliding min the doc's own row already contains. The kernel computes
     the identical Karp-Rabin packs and window minima per document in
     int64 numpy (all intermediates < 2^52 — exact), entirely map-side:
@@ -1095,35 +1095,6 @@ def winnow_hashes(docs: DataFrame) -> DataFrame:
                 })
 
     return src.mapInPandas(kern, schema)
-
-
-def _winnow_window(docs: DataFrame) -> DataFrame:
-    """The r5 SQL-window winnowing form — the shape the frozen DuckDB
-    oracle text states. Kept as the equivalence reference for the Arrow
-    kernel above (tests/test_winnow_kernel.py runs both on planted edge
-    docs and the fixture corpus and asserts identical row sets)."""
-    grams = docs.filter(F.length("text") >= WINNOW_K).select(
-        "doc_id",
-        "text",
-        F.explode(
-            F.sequence(F.lit(0), F.length("text") - WINNOW_K)
-        ).alias("pos"),
-    )
-    pack = (
-        F.expr(_winnow_hash_sql()).cast("bigint") * _WINNOW_POS_FIELD
-        + F.col("pos")
-    ).alias("pack")
-    g = grams.select("doc_id", "pos", pack)
-    win = (
-        Window.partitionBy("doc_id").orderBy("pos")
-        .rowsBetween(0, WINNOW_W - 1)
-    )
-    sel = g.select("doc_id", F.min("pack").over(win).alias("m")).distinct()
-    return sel.select(
-        "doc_id",
-        (F.col("m") % _WINNOW_POS_FIELD).cast("int").alias("gram_pos"),
-        F.expr(f"m div {_WINNOW_POS_FIELD}").cast("bigint").alias("gram_hash"),
-    )
 
 
 def _winnow_sketch_cte(table: str) -> str:

@@ -18,6 +18,8 @@ semantics differ). Engine-specific fragments are parameterized per dialect.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,7 +84,11 @@ _ALKIS_HNR = """CASE CAST(okey % 17 AS INT)
   ELSE CAST(hnum AS STRING)
 END"""
 
-ALKIS_BASE_CTE = f"""alkis_base AS (
+
+def alkis_base_cte(source: str) -> str:
+    """The ``alkis_base`` CTE over ``source``, a table with the ``orders``
+    columns (the oracle reads ``orders``; the Spark view its re-split)."""
+    return f"""alkis_base AS (
   SELECT
     okey,
     dnum,
@@ -99,9 +105,12 @@ ALKIS_BASE_CTE = f"""alkis_base AS (
     SELECT o_orderkey AS okey,
            CAST(o_custkey % 20 AS BIGINT) AS dnum,
            CAST(o_orderkey % 80 + 1 AS BIGINT) AS hnum
-    FROM orders
+    FROM {source}
   )
 )"""
+
+
+ALKIS_BASE_CTE = alkis_base_cte("orders")
 
 ALKIS_CTE = """alkis AS (
   SELECT
@@ -320,50 +329,51 @@ EMB_DUP_SPARK_CTE = """emb_dup AS (
 # Registration / composition helpers
 # --------------------------------------------------------------------------
 
+def _resplit(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition ``df`` on its unique ``key`` to the session's task
+    slots, capped by SPARK_GRAFT_INPUT_PARTITIONS; ``df`` as is when the
+    env is unset or 0."""
+    ceiling = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
+    if ceiling <= 0:
+        return df
+    width = min(ceiling, spark.sparkContext.defaultParallelism)
+    return df.repartition(width, F.col(key))
+
+
 def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register the driver's parquet tables as temp views.
 
-    The sandbox files are single-row-group parquet (one scan task no matter
-    how many cores), which starves local[32]; SPARK_GRAFT_INPUT_PARTITIONS
-    re-splits the fact tables after scan to emulate the many-split layout a
-    real lake would have. Dimension-sized tables stay unsplit."""
-    import os
-
+    The sandbox files are single-row-group parquet: one scan task no matter
+    how many cores. SPARK_GRAFT_INPUT_PARTITIONS turns on a re-split of the
+    tables whose consumers run expensive per-row map work before their first
+    shuffle (`documents`, `embeddings`; `orders` via `alkis_base`, see
+    ``register_derived_views``). The env is an on/off gate and a ceiling:
+    the width is ``min(env, defaultParallelism)``, one partition per task
+    slot (session.py's default: ``max(SPARK_GRAFT_CPUS, 8)``). Splitting
+    wider only adds task waves of a few rows each, whose dispatch outweighs
+    their work at these sizes. `scripts/scaling_*` pin 128 shuffle
+    partitions, which also sets defaultParallelism, so they keep the env's
+    64 at both levels."""
     # The driver's harness session may not pin a timezone; every derived
     # date (history, tpch filters) must match DuckDB's UTC-naive timestamps,
     # so pin it here at query-build time (runtime-settable conf).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
-    # Re-split only the tables whose consumers run EXPENSIVE per-row map
-    # work before the first shuffle (derived-CTE string/regex chains,
-    # shingling, codecs, vector math) — there the round-robin exchange buys
-    # 64-way parallelism for CPU the 1-row-group scan would serialize.
     # lineitem's and events' consumers (tpch q1/q3/q6; the window/agg-first
     # events family and the history view) shuffle or partial-aggregate
-    # immediately: for them the repartition is a pure extra pass (guide
-    # §2.4 — an Exchange feeding another Exchange/partial-agg does no work
-    # a map-side partial couldn't; measured 3× on sessionize/history at
-    # sf1.0), and scan parallelism comes from row-group-aligned splits
-    # (session.py maxPartitionBytes) instead.
-    # HASH-repartition on each table's unique key, NOT round-robin: a
-    # keyless repartition(n) first pays a local sort of its whole input
-    # (sortBeforeRepartition, needed for retry determinism — guide §2.5),
-    # which measured as 0.74 s of the 0.91 s exchange at sf1.0; hashing a
-    # unique key is deterministic under retries with no sort (same guide
-    # section's recommendation) and spreads 1.5M distinct keys to within
-    # ±1.5% across 64 partitions.
-    # `orders` is NOT re-split at the base view: its expensive consumers all
-    # go through `alkis_base` (which re-splits itself, below), while the
-    # direct readers (tpch q3/q5, top_customers) join or aggregate
-    # immediately — for them the re-split exchange sat uselessly BELOW a
-    # BroadcastExchange in the q3 plan (r6: hashpartitioning(o_orderkey,64)
-    # feeding a broadcast — one whole extra pass over the filtered table).
+    # immediately: for them a re-split is a pure extra pass (guide §2.4;
+    # measured 3× on sessionize/history at sf1.0), and scan parallelism
+    # comes from row-group-aligned splits (session.py maxPartitionBytes).
+    # The re-split hashes each table's unique key, NOT round-robin: a
+    # keyless repartition(n) first sorts its whole input for retry
+    # determinism (sortBeforeRepartition, guide §2.5; 0.74 s of a 0.91 s
+    # exchange at sf1.0), while hashing a unique key is retry-deterministic
+    # with no sort and spreads evenly.
     wide = {"documents": "doc_id", "embeddings": "vec_id"}
     dfs = {}
     for t in TESTDATA_TABLES:
         df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
-        if n_parts > 0 and t in wide:
-            df = df.repartition(n_parts, F.col(wide[t]))
+        if t in wide:
+            df = _resplit(spark, df, wide[t])
         df.createOrReplaceTempView(t)
         dfs[t] = df
     return dfs
@@ -371,26 +381,16 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def register_derived_views(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the derived tables as temp views in Spark (lazy plans)."""
-    import os
-
     load_testdata(spark, sf_dir)
-    # The alkis/osm derive chains (corrections → explodes → 15-step
-    # normalize key) are the engine's most expensive per-row map work, so
-    # THIS is where the input re-split earns its exchange: hash the narrow
-    # orders scan on its unique key before the derivation fans out. The
-    # oracle-side ALKIS_BASE_CTE text is frozen (`FROM orders`); only the
-    # Spark view body swaps in the re-split twin — the row multiset is
-    # identical (repartition is a semantic no-op).
-    n_parts = int(os.environ.get("SPARK_GRAFT_INPUT_PARTITIONS", "0"))
-    alkis_base_src = ALKIS_BASE_CTE
-    if n_parts > 0:
-        spark.table("orders").repartition(
-            n_parts, F.col("o_orderkey")
-        ).createOrReplaceTempView("orders_resplit")
-        alkis_base_src = ALKIS_BASE_CTE.replace(
-            "FROM orders", "FROM orders_resplit"
-        )
-    spark.sql(f"CREATE OR REPLACE TEMP VIEW alkis_base AS WITH {alkis_base_src} SELECT * FROM alkis_base")
+    # `orders` is re-split only under `alkis_base`: the alkis/osm derive
+    # chains (corrections → explodes → 15-step normalize key) are the
+    # engine's most expensive per-row map work, while the direct orders
+    # readers (tpch q3/q5, top_customers) join or aggregate at once (r6: a
+    # base-view re-split sat below a BroadcastExchange in q3). The oracle
+    # reads `orders`; the Spark view reads the same rows, re-split.
+    _resplit(spark, spark.table("orders"), "o_orderkey").createOrReplaceTempView(
+        "orders_resplit")
+    spark.sql(f"CREATE OR REPLACE TEMP VIEW alkis_base AS WITH {alkis_base_cte('orders_resplit')} SELECT * FROM alkis_base")
     spark.sql(f"CREATE OR REPLACE TEMP VIEW alkis AS WITH {ALKIS_CTE} SELECT * FROM alkis")
     spark.sql(f"CREATE OR REPLACE TEMP VIEW osm AS WITH {OSM_SPARK_CTE} SELECT * FROM osm")
     spark.sql(f"CREATE OR REPLACE TEMP VIEW history AS WITH {HISTORY_CTE} SELECT * FROM history")
@@ -398,15 +398,7 @@ def register_derived_views(spark: SparkSession, sf_dir: str) -> None:
     spark.sql(f"CREATE OR REPLACE TEMP VIEW docs_dup AS WITH {DOCS_DUP_SPARK_CTE} SELECT * FROM docs_dup")
     spark.sql("CREATE OR REPLACE TEMP VIEW emb_dup AS WITH " + EMB_DUP_SPARK_CTE + " SELECT * FROM emb_dup")
     spark.sql(f"CREATE OR REPLACE TEMP VIEW polys AS WITH {POLYS_CTE} SELECT * FROM polys")
-    for stmt in _split_images_views(images_spark_cte()):
-        spark.sql(stmt)
-
-
-def _split_images_views(cte_text: str) -> list[str]:
-    """Turn the 3-layer images CTE into stacked temp views for Spark."""
-    return [
-        "CREATE OR REPLACE TEMP VIEW images AS WITH " + cte_text + " SELECT * FROM images",
-    ]
+    spark.sql(f"CREATE OR REPLACE TEMP VIEW images AS WITH {images_spark_cte()} SELECT * FROM images")
 
 
 def duckdb_with(*ctes: str) -> str:

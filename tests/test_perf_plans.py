@@ -658,3 +658,49 @@ def test_dedup_rows_single_scan(spark, sf_dir):
     assert plan.count("orders.parquet") == 1, plan
     assert "Join" not in plan and "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_input_resplit_sized_to_task_slots(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_INPUT_PARTITIONS is an on/off gate and a ceiling: set to
+    64, each query's source re-split hashes its unique key into the
+    session's task slots (defaultParallelism), never into 64; unset, no
+    re-split exchange is planned on those keys."""
+    import re
+
+    from osm_coverage_spark import registry
+
+    keys = {"ann_topk": "vec_id", "dedup_minhash_lsh": "doc_id",
+            "coverage_missing": "o_orderkey"}
+    n = spark.sparkContext.defaultParallelism
+    assert n < 64, n  # else the ceiling, not the slot count, sets the width
+
+    def resplits(query, key):
+        plan = _plan(registry.QUERIES[query](spark, sf_dir))
+        return plan, re.findall(
+            rf"Exchange hashpartitioning\({key}#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+            plan)
+
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_INPUT_PARTITIONS", raising=False)
+        for query, key in keys.items():
+            plan, widths = resplits(query, key)
+            assert not widths, plan
+        monkeypatch.setenv("SPARK_GRAFT_INPUT_PARTITIONS", "64")
+        for query, key in keys.items():
+            plan, widths = resplits(query, key)
+            assert widths and set(widths) == {str(n)}, plan
+            assert ", 64)" not in plan, plan
+    finally:
+        monkeypatch.undo()
+        derived.register_derived_views(spark, sf_dir)
+
+
+def test_alkis_osm_oracle_text_unchanged():
+    """The DuckDB oracle prelude is fingerprinted by the gate: building
+    ALKIS_BASE_CTE from ``alkis_base_cte("orders")`` must leave it
+    byte-identical."""
+    import hashlib
+
+    text = derived.oracle_prelude_alkis_osm()
+    assert hashlib.sha256(text.encode()).hexdigest() == (
+        "e0fc34ff6163dd846ce09742937d2aded396d4182db17bfac3da0e08ea036bc7")

@@ -1,5 +1,5 @@
 """The Arrow winnowing kernel must be row-set-identical to the SQL-window
-form the frozen DuckDB oracle states (queries_text._winnow_window)."""
+form the frozen DuckDB oracle states (tests/winnow_reference.py)."""
 
 import os
 
@@ -9,6 +9,7 @@ from pyspark.sql import functions as F  # noqa: F401
 from osm_coverage_spark import queries_text as qt
 from osm_coverage_spark.session import get_spark
 from osm_coverage_spark.sources import derived
+from tests.winnow_reference import winnow_window
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
@@ -40,10 +41,10 @@ def test_kernel_equals_window_on_edge_docs(spark):
         ],
         "doc_id long, text string",
     )
-    assert _rows(qt.winnow(docs)) == _rows(qt._winnow_window(docs))
+    assert _rows(qt.winnow(docs)) == _rows(winnow_window(docs))
 
 
 def test_kernel_equals_window_on_fixture_corpus(spark):
     derived.load_testdata(spark, SF_DIR)
     docs = spark.table("documents")
-    assert _rows(qt.winnow(docs)) == _rows(qt._winnow_window(docs))
+    assert _rows(qt.winnow(docs)) == _rows(winnow_window(docs))
